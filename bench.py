@@ -1,13 +1,12 @@
 #!/usr/bin/env python3
-"""Bench harness (driver contract).
+"""Per-query timer for the operator registry (driver contract).
 
-Runs the flagship extraction pipeline plus headline registry queries at
-``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+Times every registered query at ``$SPARK_GRAFT_SF_DIR`` (default
+``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
+JSON line::
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"extract": sec, ...}, "sf": 0.1,
-     "docs_per_sec": ..., "mb_per_sec": ...,
+    {"metric": "...", "value": <headline sec>, "unit": "sec",
+     "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1,
      "steal_pct": ..., "calib_efficiency": ..., "bracket_clean": bool}
 
 Every run self-certifies its ambient bracket (bench_ambient.py):
@@ -20,17 +19,10 @@ baseline excursions are reported under `regressions_unattributable`
 instead of `regressions` — raw walls are kept, attribution is
 suppressed.
 
-The extraction input is a deterministic pages table synthesized once
-from the driver's ``documents.parquet`` (sources/pages.py) and cached
-as parquet under ``.bench/`` so the timed job is the real workload —
-parquet scan -> split assignment -> vectorized extract — not payload
-synthesis. ``SPARK_GRAFT_BENCH_REPEAT`` tiles the documents table for
-more load (default 96 -> ~480k pages at sf0.1, enough that per-doc
-kernel CPU dominates fixed job overhead at local[32]).
+Extraction throughput, scaling and resume cost are measured on the
+production path (``run_resumable``) by ``perfbench/run.py``.
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
-SPARK_GRAFT_BENCH_REPEAT, SPARK_GRAFT_BENCH_SKIP_QUERIES=1 (extraction
-only — used by bench_scaling.py).
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_REPS.
 """
 
 from __future__ import annotations
@@ -46,8 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 REPO = os.path.dirname(os.path.abspath(__file__))
 
 # Headline registry queries (one per operator family). The JSON
-# "value" field sums extract + these, keeping the headline metric
-# comparable across rounds; EVERY other registry query is also timed
+# "value" field sums these; EVERY other registry query is also timed
 # and reported in "queries" so per-query regressions are detectable
 # against the table in BENCH/BASELINE.md (±30% ambient VM noise on
 # this box — treat >1.5x as a real regression, see CLAUDE.md).
@@ -70,7 +61,8 @@ def load_baseline() -> dict[str, float]:
     """Per-query min-of-6 baselines from BENCH/BASELINE.md (the
     '## Per-query wall times' table), so each bench run can report its
     own ratio-vs-baseline and the 1.5x regression rule is evaluable
-    per round without a separate analysis step."""
+    per round without a separate analysis step. The parse stops at the
+    next '## ' heading: later sections hold tables of other walls."""
     import re
 
     try:
@@ -80,107 +72,16 @@ def load_baseline() -> dict[str, float]:
     parts = text.split("## Per-query wall times", 1)
     if len(parts) < 2:
         return {}
+    section = parts[1].split("\n## ", 1)[0]
     return {
         name: float(v)
-        for name, v in re.findall(
-            r"\| ([a-z0-9_]+) \| ([0-9.]+)", parts[1]
-        )
-    }
-
-
-def warm_python_workers(spark, cores: int) -> None:
-    """Untimed pre-warm of the Python worker pool.
-
-    Each local[N] slot forks a python worker that imports
-    pandas/pyarrow/our kernels on first use (~5-7 s wall for 32
-    concurrent cold imports). On a real cluster executors live for the
-    whole 100 TB job, so steady-state throughput — the thing the
-    scaling criterion is about — excludes that one-time cost; this
-    pass pays it before the timer starts."""
-    import pandas as pd
-
-    def touch(batches):
-        from ragflow_spark.kernels.extract import extract_document  # noqa: F401
-
-        for pdf in batches:
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    (
-        spark.range(cores * 4)
-        .repartition(cores * 4)
-        .mapInPandas(touch, "n long")
-        .count()
-    )
-
-
-def pages_parquet(spark, sf_dir: str, repeat: int, text_tile: int = 1) -> str:
-    """Synthesize-once cache of the deterministic pages table."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    suffix = f"_f{text_tile}" if text_tile > 1 else ""
-    path = os.path.join(
-        REPO, ".bench", f"pages_{tag}_r{repeat}{suffix}_p128.parquet"
-    )
-    from ragflow_spark.sources.cachefs import atomic_materialize
-
-    def write(tmp: str) -> None:
-        from ragflow_spark.sources.pages import synthesize_pages
-
-        pages = synthesize_pages(spark, sf_dir, repeat=repeat, text_tile=text_tile)
-        # 128 files -> enough scan partitions for smooth scheduling at
-        # local[32] (4 waves of uniform ~5 MB tasks)
-        pages.repartition(128).write.mode("overwrite").parquet(tmp)
-
-    return atomic_materialize(path, write)
-
-
-def bench_extraction(
-    spark, sf_dir: str, repeat: int, cores: int, text_tile: int = 1
-) -> dict:
-    from pyspark.sql import functions as F
-
-    from ragflow_spark.plans.pipeline import (
-        assign_splits,
-        compute_hot_hosts,
-        extract_pages,
-    )
-
-    path = pages_parquet(spark, sf_dir, repeat, text_tile=text_tile)
-    pages = spark.read.parquet(path)
-    n_splits = max(64, cores * 4)
-    # cheap url-only pre-pass, untimed: per-host size-proportional salts
-    hot = compute_hot_hosts(pages, n_splits=n_splits, sample="auto")
-    warm_python_workers(spark, cores)
-
-    t0 = time.perf_counter()
-    staged = assign_splits(
-        pages, n_splits=n_splits, salt_factor=8, hot_hosts=hot
-    )
-    ex = extract_pages(staged)  # zero-shuffle map over scan partitions
-    row = ex.agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum((F.col("parse_status") == "ok").cast("long")).alias("ok"),
-    ).collect()[0]
-    wall = time.perf_counter() - t0
-    return {
-        "wall_s": wall,
-        "docs": int(row["docs"]),
-        "ok": int(row["ok"]),
-        "bytes_in": int(row["bytes_in"]),
-        "docs_per_sec": row["docs"] / wall,
-        "mb_per_sec": row["bytes_in"] / 1e6 / wall,
+        for name, v in re.findall(r"\| ([a-z0-9_]+) \| ([0-9.]+)", section)
     }
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "96"))
-    # text_tile for the PRIMARY timed extraction (default 1 = the tiny
-    # driver-corpus pages; bench_scaling sets it to CC-realistic sizes
-    # so per-page kernel work dominates fixed job overhead)
-    tile = int(os.environ.get("SPARK_GRAFT_BENCH_TILE", "1"))
-    skip_queries = os.environ.get("SPARK_GRAFT_BENCH_SKIP_QUERIES") == "1"
     # per-query minimum over >=3 in-process repetitions: identical runs
     # vary +-30% from ambient VM load (BENCH/BASELINE.md), so a single
     # wall is not comparable to the committed min-of-6 baselines
@@ -192,6 +93,7 @@ def main() -> None:
         spin_calibration,
         steal_pct,
     )
+    import ragflow_spark.operators as ops
     from ragflow_spark.session import get_spark
 
     # ambient bracket, part 1: spin calibration + steal sample BEFORE
@@ -205,40 +107,15 @@ def main() -> None:
     spark = get_spark("bench", cores=cores)
 
     timings: dict[str, float] = {}
-
-    ext_runs = [
-        bench_extraction(spark, sf_dir, repeat, cores, text_tile=tile)
-        for _ in range(reps)
-    ]
-    ext = min(ext_runs, key=lambda e: e["wall_s"])
-    timings["extract"] = round(ext["wall_s"], 3)
-
-    # optional realistic-page-size axis: SPARK_GRAFT_BENCH_FAT=K tiles
-    # each doc's text xK (~K*1.4 kB pages), repeat scaled down 4x
-    fat = int(os.environ.get("SPARK_GRAFT_BENCH_FAT", "0"))
-    fat_stats = None
-    if fat > 1:
-        fat_runs = [
-            bench_extraction(
-                spark, sf_dir, max(1, repeat // 4), cores, text_tile=fat
-            )
-            for _ in range(reps)
-        ]
-        fat_stats = min(fat_runs, key=lambda e: e["wall_s"])
-        timings["extract_fat"] = round(fat_stats["wall_s"], 3)
-
-    if not skip_queries:
-        import ragflow_spark.operators as ops
-
-        rest = [q for q in sorted(ops.QUERIES) if q not in HEADLINE_QUERIES]
-        for name in HEADLINE_QUERIES + rest:
-            fn = ops.QUERIES[name]
-            walls = []
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                _noop_write(fn(spark, sf_dir))
-                walls.append(time.perf_counter() - t0)
-            timings[name] = round(min(walls), 3)
+    rest = [q for q in sorted(ops.QUERIES) if q not in HEADLINE_QUERIES]
+    for name in HEADLINE_QUERIES + rest:
+        fn = ops.QUERIES[name]
+        walls = []
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            _noop_write(fn(spark, sf_dir))
+            walls.append(time.perf_counter() - t0)
+        timings[name] = round(min(walls), 3)
 
     # ambient bracket, part 2: steal over the whole timed section plus
     # a SECOND spin calibration — measured on this VM, a window that
@@ -256,19 +133,13 @@ def main() -> None:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
-    headline = ["extract", "extract_fat"] + HEADLINE_QUERIES
     result = {
         "metric": "headline_suite_wall",
-        "value": round(sum(v for k, v in timings.items() if k in headline), 3),
+        "value": round(sum(timings[k] for k in HEADLINE_QUERIES), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
         "cores": cores,
-        "extract_docs": ext["docs"],
-        "extract_ok": ext["ok"],
-        "extract_mb_in": round(ext["bytes_in"] / 1e6, 2),
-        "docs_per_sec": round(ext["docs_per_sec"], 1),
-        "mb_per_sec": round(ext["mb_per_sec"], 2),
     }
     result["reps"] = reps
     # ambient self-certification: a dirty bracket means walls in this
@@ -279,14 +150,6 @@ def main() -> None:
         calib["efficiency"],
         calib_after["efficiency"],
     ]
-    if fat_stats:
-        result["fat_pages"] = {
-            "text_tile": fat,
-            "docs": fat_stats["docs"],
-            "mb_in": round(fat_stats["bytes_in"] / 1e6, 1),
-            "docs_per_sec": round(fat_stats["docs_per_sec"], 1),
-            "mb_per_sec": round(fat_stats["mb_per_sec"], 2),
-        }
     # the committed baselines are sf0.1/local[32]: ratios at any other
     # scale would compare fixed overhead, not engine speed
     baseline = load_baseline() if sf_val == 0.1 and cores == 32 else {}

@@ -1602,17 +1602,16 @@ def host_boilerplate_table(docs) -> dict[str, frozenset[str]]:
         )
         .select("source", "h")
     )
-    # enforce the bound BEFORE collecting (an assert after the collect
-    # would OOM the driver first and vanishes under python -O —
-    # review fix): count() is a cheap distributed aggregate here
-    n = flagged.count()
-    if n >= 100_000:
+    # enforce the bound on a bounded collect (an assert after a full
+    # collect would OOM the driver first and vanishes under python -O):
+    # one job, and never more than the bound reaches the driver
+    rows = flagged.limit(100_000).collect()
+    if len(rows) >= 100_000:
         raise ValueError(
-            f"boilerplate table unexpectedly large ({n} spans): the "
-            "frequent-span definition should bound it at site-chrome "
-            "size — refusing to collect to the driver"
+            f"boilerplate table unexpectedly large (>= {len(rows)} "
+            "spans): the frequent-span definition should bound it at "
+            "site-chrome size — refusing to collect to the driver"
         )
-    rows = flagged.collect()
     table_: dict[str, set] = {}
     for r in rows:
         table_.setdefault(r.source, set()).add(r.h)

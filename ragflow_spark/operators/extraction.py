@@ -6,10 +6,9 @@ documents.text, so the byte surface is value-oracle-able after all:
 extract_text_hashes_full reconstructs the md5 of every page's
 extracted bytes in pure SQL (all routes), chunk_spans_full
 reconstructs the chunker's full span output (template, count, every
-char_start:char_end:token_count triple) the same way, and the
-narrower plain/structured/stats twins stay as driver-history rows.
-Only extract_text_hashes stays rows-only — the byte-STABILITY probe;
-byte-exactness against arbitrary (non-synthesized) inputs is covered
+char_start:char_end:token_count triple) the same way, and
+extract_pages_stats pins the per-route parse outcome counts.
+Byte-exactness against arbitrary (non-synthesized) inputs is covered
 by the pinned golden fixtures in tests/test_golden.py (FIXTURES.md
 §2).
 """
@@ -47,8 +46,8 @@ def extract_pages_stats(spark, sf_dir):
     per (content_type, parse_status, parse_code) counts. The oracle
     recomputes the mix arithmetically from the synthesizer's
     doc_id % 20 routing — a real end-to-end check that every page
-    lands in the right parser with the right outcome. Chunk/char
-    totals are covered per-url by extract_text_hashes + goldens."""
+    lands in the right parser with the right outcome. Per-url bytes
+    are covered by extract_text_hashes_full + goldens."""
     pages = synthesize_pages(
         spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
     )
@@ -56,138 +55,6 @@ def extract_pages_stats(spark, sf_dir):
     ex = extract_pages(staged)
     return ex.groupBy("content_type", "parse_status", "parse_code").agg(
         F.count(F.lit(1)).alias("n_docs")
-    )
-
-
-@register(
-    "extract_text_hashes_plain",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, text, str_split(text, ' ') AS words FROM documents
-      WHERE doc_id % 20 IN (14, 15, 16, 17)
-    ), p AS (
-      SELECT doc_id, text, words, len(words) AS n,
-             greatest(8, len(words) // 6) AS per
-      FROM w
-    ), paras AS (
-      SELECT doc_id,
-        -- real empty signal: str_split('', ' ') is [''] so n is never
-        -- 0; all-whitespace text is the case Python's split() maps to
-        -- [] -> 'empty document body' (ADVICE r3). Otherwise assumes
-        -- the synthesizer's non-empty single-space-separated contract.
-        CASE WHEN length(trim(text)) = 0 THEN ['empty document body'] ELSE
-          list_transform(
-            range(least(6, cast(ceil(n * 1.0 / per) AS INT))),
-            i -> array_to_string(words[i * per + 1 : (i + 1) * per], ' ')
-          ) END AS ps
-      FROM p
-    )
-    SELECT doc_id, md5(array_to_string(ps, chr(10))) AS text_md5 FROM paras
-    """,
-)
-def extract_text_hashes_plain(spark, sf_dir):
-    """VALUE oracle for a byte-level extraction subset: the plain
-    article templates (doc_id % 20 in 14..17, sources/pages.py:149-151
-    — header + <article> paragraphs + footer, no entity/charset/
-    malformed variation) extract to exactly the newline-joined
-    paragraph regrouping of documents.text, so the md5 of the
-    extracted bytes is reconstructible in pure SQL (str_split ->
-    _paragraphs regrouping: per = max(8, n_words // 6), first 6
-    paragraphs -> join with \\n -> md5). This runs the REAL pipeline —
-    synthesize -> sniff -> DOM parse -> boilerplate strip -> normalize
-    — and pins ~20% of its byte output to a SQL value oracle; the
-    remaining templates stay golden-pinned (tests/test_golden.py) and
-    rows-only in `extract_text_hashes`."""
-    pages = synthesize_pages(
-        spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
-    )
-    staged = assign_splits(pages, n_splits=32, salt_factor=8, hot_hosts=None)
-    ex = extract_pages(staged)
-    doc_id = F.regexp_extract("url", r"doc-(\d+)$", 1).cast("bigint")
-    return (
-        ex.withColumn("doc_id", doc_id)
-        .filter((F.col("doc_id") % 20).isin(14, 15, 16, 17))
-        .select(
-            "doc_id",
-            F.md5(F.coalesce("extracted_text", F.lit(""))).alias("text_md5"),
-        )
-    )
-
-
-@register(
-    "extract_text_hashes_structured",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, text, str_split(text, ' ') AS words FROM documents
-      WHERE doc_id % 20 IN (11, 12)
-    ), p AS (
-      SELECT doc_id, text, words, len(words) AS n,
-             greatest(8, len(words) // 6) AS per
-      FROM w
-    ), paras AS (
-      SELECT doc_id,
-        CASE WHEN length(trim(text)) = 0 THEN ['empty document body'] ELSE
-          list_transform(
-            range(least(6, cast(ceil(n * 1.0 / per) AS INT))),
-            i -> array_to_string(words[i * per + 1 : (i + 1) * per], ' ')
-          ) END AS ps
-      FROM p
-    ), book AS (
-      SELECT doc_id,
-             'Book ' || doc_id || chr(10) || array_to_string(
-               list_transform(
-                 range(len(ps)),
-                 i -> 'Chapter ' || (i + 1) || chr(10) || ps[i + 1]
-               ), chr(10)) AS t
-      FROM paras WHERE doc_id % 20 = 11
-    ), paper AS (
-      SELECT doc_id,
-             'Paper ' || doc_id || chr(10) || 'Abstract' || chr(10) || ps[1]
-             || chr(10)
-             || CASE WHEN len(ps) > 2 THEN array_to_string(
-                  list_transform(
-                    range(len(ps) - 2),
-                    i -> (i + 1) || '. Section' || chr(10) || ps[i + 2]
-                  ), chr(10)) || chr(10) ELSE '' END
-             -- rtrim: the 80-char cut can land on a space, which the
-             -- kernel's whitespace normalization strips
-             || 'References' || chr(10) || '[1] '
-             || rtrim(substr(ps[len(ps)], 1, 80)) AS t
-      FROM paras WHERE doc_id % 20 = 12
-    )
-    SELECT doc_id, md5(t) AS text_md5 FROM book
-    UNION ALL
-    SELECT doc_id, md5(t) AS text_md5 FROM paper
-    """,
-)
-def extract_text_hashes_structured(spark, sf_dir):
-    """Second partial VALUE oracle for byte-level extraction (r3
-    verdict item #6): the heading/book template (doc_id % 20 == 11,
-    sources/pages.py:133-137 — h1 + per-paragraph h2 chapters) and the
-    paper template (== 12, pages.py:138-146 — h1/Abstract/numbered
-    sections/References with the last paragraph truncated to 80 chars)
-    reduce to pure relational string assembly over documents.text, so
-    their extracted bytes are SQL-reconstructible just like the plain
-    routes. Together with extract_text_hashes_plain this pins ~30% of
-    the byte surface to value oracles; the residue (entity/charset/
-    malformed/whitespace/huge-node/table routes 0-10, 13 and the PDF
-    routes 18-19) intentionally stays golden-pinned: those branches
-    exist precisely because their outputs are NOT naive functions of
-    the source text (charset transcoding, entity decode, tag
-    recovery)."""
-    pages = synthesize_pages(
-        spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
-    )
-    staged = assign_splits(pages, n_splits=32, salt_factor=8, hot_hosts=None)
-    ex = extract_pages(staged)
-    doc_id = F.regexp_extract("url", r"doc-(\d+)$", 1).cast("bigint")
-    return (
-        ex.withColumn("doc_id", doc_id)
-        .filter((F.col("doc_id") % 20).isin(11, 12))
-        .select(
-            "doc_id",
-            F.md5(F.coalesce("extracted_text", F.lit(""))).alias("text_md5"),
-        )
     )
 
 
@@ -204,6 +71,10 @@ _ROUTES_CTES = """
       FROM documents
     ), paras AS (
       SELECT doc_id, doc_id % 20 AS t,
+        -- real empty signal: str_split('', ' ') is [''] so n is never
+        -- 0; all-whitespace text is the case Python's split() maps to
+        -- [] -> 'empty document body' (ADVICE r3). Otherwise assumes
+        -- the synthesizer's non-empty single-space-separated contract.
         CASE WHEN length(trim(text)) = 0 THEN ['empty document body'] ELSE
           list_transform(
             range(least(6, cast(ceil(n * 1.0 / per) AS INT))),
@@ -289,12 +160,10 @@ def extract_text_hashes_full(spark, sf_dir):
     huge single text node; t=11/12 heading/paper structure; t=13
     NFD->NFC normalization (oracle embeds the composed form); t=14-17
     plain articles; t=18 single-column PDF with header/footer lines;
-    t=19 two-column PDF reassembled in reading order. The narrower
-    plain/structured twins (above) stay as the driver-history rows;
-    `extract_text_hashes` below stays rows-only as the byte-STABILITY
-    probe; the chunker's span output gets its own full value oracle in
-    `chunk_spans_full`. Empty-text branches are pinned at the kernel
-    level in tests/test_kernels_html.py."""
+    t=19 two-column PDF reassembled in reading order. The chunker's
+    span output gets its own full value oracle in `chunk_spans_full`.
+    Empty-text branches are pinned at the kernel level in
+    tests/test_kernels_html.py."""
     pages = synthesize_pages(
         spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
     )
@@ -308,30 +177,6 @@ def extract_text_hashes_full(spark, sf_dir):
             F.md5(F.coalesce("extracted_text", F.lit(""))).alias("text_md5"),
             "parse_code",
         )
-    )
-
-
-def extract_text_hashes(spark, sf_dir):
-    """Byte-stability surface: md5 of every extracted_text. Two runs
-    of this query must hash-match exactly.
-
-    NOT registered as a driver query since round 5: it spent four
-    rounds as the lone `no_oracle` row, and its purpose (byte
-    stability on arbitrary inputs) is strictly dominated by the full
-    value oracle `extract_text_hashes_full` plus the golden fixtures
-    (tests/test_golden.py); kernel-level determinism is pinned by
-    tests/test_properties.py::test_extraction_deterministic_and_total.
-    Kept as a callable for ad-hoc stability sweeps."""
-    pages = synthesize_pages(
-        spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
-    )
-    staged = assign_splits(pages, n_splits=32, salt_factor=8, hot_hosts=None)
-    ex = extract_pages(staged)
-    return ex.select(
-        "url",
-        "parse_code",
-        F.md5(F.coalesce("extracted_text", F.lit(""))).alias("text_md5"),
-        F.size(F.coalesce("chunks", F.array())).alias("n_chunks"),
     )
 
 

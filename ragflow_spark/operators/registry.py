@@ -145,7 +145,6 @@ STABLE_TAIL = [
     "asof_last_login",
     "cube_event_stats",
     "extract_pages_stats",
-    "extract_text_hashes_plain",
     "media_metadata",
     "image_thumbnail_stats",
     "frame_sample_checksum",

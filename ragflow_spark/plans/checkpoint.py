@@ -31,6 +31,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -47,8 +48,9 @@ from ragflow_spark.plans.pipeline import (
 # ------------------------------------------------ snapshot manifest
 # Parquet stand-in for Iceberg's snapshot log (metadata/snap-*.avro +
 # table-metadata snapshot list): every committed wave appends ONE
-# run_id-stamped JSON snapshot under out_dir/snapshots/, written
-# atomically (tmp + rename). Iceberg gives this chain transactionally;
+# run_id-stamped JSON snapshot under out_dir/snapshots/, published
+# atomically and exclusively (writer-unique tmp + hard link, which
+# fails rather than replaces). Iceberg gives this chain transactionally;
 # the conf to flip it on a cluster is documented in the module
 # docstring above. The metrics table stays the RESUME source of truth;
 # snapshots are the read-side time-travel layer.
@@ -79,12 +81,14 @@ def record_snapshot(
 
     snapshot_id is a monotone sequence across runs (a resumed run
     continues the chain, exactly like Iceberg appends to the same
-    table's snapshot log)."""
+    table's snapshot log). A writer whose listing is stale, or that
+    races another writer, never replaces an existing snap-N: the
+    publish is an exclusive create, and a taken id moves it to the
+    next one."""
     d = _snap_dir(out_dir)
     os.makedirs(d, exist_ok=True)
     sid = len(snapshots(out_dir)) + 1
     rec = {
-        "snapshot_id": sid,
         "run_id": run_id,
         "wave": wave_index,
         "splits": sorted(int(s) for s in splits),
@@ -92,11 +96,18 @@ def record_snapshot(
     }
     if note:
         rec["note"] = note
-    tmp = os.path.join(d, f".snap-{sid:06d}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.rename(tmp, os.path.join(d, f"snap-{sid:06d}.json"))
-    return sid
+    tmp = os.path.join(d, f".snap-{uuid.uuid4().hex}.json.tmp")
+    try:
+        while True:
+            with open(tmp, "w") as f:
+                json.dump({"snapshot_id": sid, **rec}, f)
+            try:
+                os.link(tmp, os.path.join(d, f"snap-{sid:06d}.json"))
+                return sid
+            except FileExistsError:
+                sid += 1
+    finally:
+        os.unlink(tmp)
 
 
 def read_extracted_asof(
@@ -117,14 +128,22 @@ def read_extracted_asof(
 
 
 def completed_splits(spark: SparkSession, out_dir: str) -> set[int]:
+    """Splits with a committed metrics row. A metrics table that is
+    absent, or holds no committed part file yet (a crash inside the
+    first append leaves only _temporary/), means nothing is done; a
+    table with part files that cannot be read raises rather than
+    silently re-parsing the whole input."""
     mpath = os.path.join(out_dir, "metrics")
     try:
-        return {
-            r["split_id"]
-            for r in spark.read.parquet(mpath).select("split_id").distinct().collect()
-        }
-    except Exception:
+        names = os.listdir(mpath)
+    except FileNotFoundError:
         return set()
+    if not any(n.startswith("part-") for n in names):
+        return set()
+    return {
+        r["split_id"]
+        for r in spark.read.parquet(mpath).select("split_id").distinct().collect()
+    }
 
 
 def run_resumable(

@@ -192,7 +192,7 @@ def test_normalize_exotic_whitespace_class_pinned():
 
 def test_oracled_routes_empty_text_branch():
     """Pins the empty-text branch of every value-oracled route
-    (extract_text_hashes_boiler / _plain / _structured, ADVICE r3):
+    (extract_text_hashes_full / chunk_spans_full, ADVICE r3):
     the synthesizer's _paragraphs('') fallback is
     ['empty document body'], so each template renders that single
     paragraph and the kernel must return exactly the title prefix (if

@@ -134,7 +134,8 @@ def test_template_span_counts_equal_rescan(template, sections, budget):
         assert c == num_tokens(text[a:b])
 
 
-# Cross-engine fuzz for the extract_text_hashes_plain VALUE oracle:
+# Cross-engine fuzz for the extract_text_hashes_full and
+# chunk_spans_full VALUE oracles (extraction.py _ROUTES_CTES):
 # the SQL paragraph regrouping (per = max(8, n//6), first 6 paras,
 # 1-based list slicing, ceil counts) must equal python _paragraphs for
 # ANY word count — the corpus only exercises a few lengths. Domain =
@@ -987,6 +988,7 @@ def test_zorder_oracle_matches_python_reference(rows):
     interleaves bits with a direct loop, so any drift in the staged
     magic numbers or a `//`-vs-round slip in the SQL fails here."""
     import datetime as dt
+    from decimal import ROUND_HALF_UP, Decimal
 
     import duckdb
     import pandas as pd
@@ -1023,6 +1025,12 @@ def test_zorder_oracle_matches_python_reference(rows):
             z |= ((y >> i) & 1) << (2 * i + 1)
         return z
 
+    def round_half_up(num, den):
+        # SQL round() and Spark F.round round ties away from zero, while
+        # python round() rounds them to even (33/32 -> 1.0312 vs 1.0313).
+        q = Decimal(num) / Decimal(den)
+        return float(q.quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP))
+
     epoch = dt.datetime(1970, 1, 1)
     mins = [
         int((base + dt.timedelta(seconds=s) - epoch).total_seconds())
@@ -1057,8 +1065,10 @@ def test_zorder_oracle_matches_python_reference(rows):
         assert int(r["n_bins"]) == len({b for _, _, _, b in rs})
         assert int(r["user_probe_pairs"]) == upairs
         assert int(r["slot_probe_pairs"]) == spairs
-        assert abs(r["avg_bins_per_user"] - round(upairs / n_users, 4)) <= 1e-4
-        assert abs(r["avg_bins_per_slot"] - round(spairs / n_slots, 4)) <= 1e-4
+        avg_u = round_half_up(upairs, n_users)
+        avg_s = round_half_up(spairs, n_slots)
+        assert abs(r["avg_bins_per_user"] - avg_u) <= 1e-4
+        assert abs(r["avg_bins_per_slot"] - avg_s) <= 1e-4
         assert int(r["layout_sig"]) == sig
         # the packed-int pair keys must be collision-free
         assert all(b < ZORDER_PAIR_BASE for _, _, _, b in rs)

@@ -54,6 +54,9 @@ def test_bench_baseline_table_parses():
     assert len(base) >= 50
     assert "extract" in base and base["extract"] > 1.0
     assert all(v > 0 for v in base.values())
+    # the operator-shape scaling block further down lists 8-22 s walls
+    # under the same query names; they must not override the mins
+    assert base["dedup_minhash_lsh"] < 5.0
 
 
 def test_media_cache_key_distinguishes_same_basename(tmp_path, monkeypatch):

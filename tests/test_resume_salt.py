@@ -243,3 +243,63 @@ def test_snapshot_reconcile_after_partial_commit(spark, pages, tmp_path):
         read_extracted_asof(spark, out, snaps2[-1]["snapshot_id"]).count()
         == full.count()
     )
+
+
+def test_snapshot_stale_writer_never_overwrites(tmp_path, monkeypatch):
+    """A writer whose snapshot listing is stale (or that races another
+    writer) picks a taken id: the exclusive publish must move it to
+    the next id instead of replacing snap-000001, so the chain stays
+    1..n with every committed record intact."""
+    import os
+
+    from ragflow_spark.plans import checkpoint
+
+    out = str(tmp_path / "snap")
+    assert checkpoint.record_snapshot(out, "a", 0, [0, 1]) == 1
+    first = os.path.join(out, "snapshots", "snap-000001.json")
+    before = open(first).read()
+
+    listed = checkpoint.snapshots(out)
+    monkeypatch.setattr(checkpoint, "snapshots", lambda _d: [])
+    assert checkpoint.record_snapshot(out, "b", 0, [2]) == 2
+    monkeypatch.undo()
+
+    assert open(first).read() == before
+    snaps = checkpoint.snapshots(out)
+    assert snaps[0] == listed[0]
+    assert [s["snapshot_id"] for s in snaps] == [1, 2]
+    assert [s["run_id"] for s in snaps] == ["a", "b"]
+    # no writer-unique tmp file is left behind
+    assert sorted(os.listdir(os.path.join(out, "snapshots"))) == [
+        "snap-000001.json",
+        "snap-000002.json",
+    ]
+
+
+def test_completed_splits_absent_vs_unreadable(spark, tmp_path):
+    """An absent metrics table, or one holding only the _temporary/
+    left by a crash inside its first append, means nothing is done;
+    a table whose committed part file is truncated must raise instead
+    of silently re-parsing the whole input."""
+    import os
+
+    from ragflow_spark.plans.checkpoint import completed_splits
+
+    assert completed_splits(spark, str(tmp_path / "missing")) == set()
+
+    tmp_only = tmp_path / "tmp_only"
+    (tmp_only / "metrics" / "_temporary" / "0").mkdir(parents=True)
+    assert completed_splits(spark, str(tmp_only)) == set()
+
+    out = tmp_path / "truncated"
+    mpath = str(out / "metrics")
+    spark.range(3).withColumnRenamed("id", "split_id").coalesce(1).write.parquet(
+        mpath
+    )
+    assert completed_splits(spark, str(out)) == {0, 1, 2}
+    (part,) = [n for n in os.listdir(mpath) if n.startswith("part-")]
+    path = os.path.join(mpath, part)
+    with open(path, "r+b") as f:
+        f.truncate(os.path.getsize(path) // 2)
+    with pytest.raises(Exception):
+        completed_splits(spark, str(out))
