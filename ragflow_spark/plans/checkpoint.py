@@ -65,9 +65,13 @@ def snapshots(out_dir: str) -> list[dict]:
     d = _snap_dir(out_dir)
     try:
         names = sorted(n for n in os.listdir(d) if n.startswith("snap-"))
-    except OSError:
+    except FileNotFoundError:
         return []
-    return [json.load(open(os.path.join(d, n))) for n in names]
+    out = []
+    for n in names:
+        with open(os.path.join(d, n)) as f:
+            out.append(json.load(f))
+    return out
 
 
 def record_snapshot(
@@ -160,6 +164,8 @@ def run_resumable(
 ) -> None:
     """Extract `pages` into out_dir/{extracted,metrics}, resumably.
 
+    ``salt_factor`` is unused (salt factors come from
+    ``compute_hot_hosts``); it stays for callers that still pass it.
     ``fail_after_waves`` injects a crash for the kill-resume test.
     ``hot_host_sample``: seeded sampling rate for the hot-host
     pre-pass; the default 'auto' samples at 1% when the optimizer
@@ -169,7 +175,7 @@ def run_resumable(
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     hot = compute_hot_hosts(pages, n_splits=n_splits, sample=hot_host_sample)
-    staged = assign_splits(pages, n_splits, salt_factor, hot)
+    staged = assign_splits(pages, n_splits, hot_hosts=hot)
     done = completed_splits(spark, out_dir)
     # Reconcile the snapshot chain with the metrics manifest: the wave
     # commit is two non-atomic steps (metrics append, then snapshot),

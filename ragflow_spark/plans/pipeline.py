@@ -4,7 +4,8 @@ One Spark DataFrame program (SURVEY.md §7.0 spine):
 
     pages
       |> assign_splits        url-host hash bucketing, salted hot hosts
-      |> repartition(split)   co-locate each resume split in one task
+      |> repartition(split)   resume waves only: co-locate each split in
+                              one task (a plain run maps over the scan)
       |> mapInPandas(extract) vectorized Arrow batches over the pure
                               kernels (one DOM parse per page; chunker
                               composed in the same pass — SURVEY.md
@@ -23,8 +24,8 @@ Scale notes (100 TB / 10^12 docs):
   big; pick n_splits >= 16x executor-cores). Splits are a pure
   function of (url, config) so resume grain is stable across runs.
 - Hot hosts (crawl skew: one host can be >30% of a crawl) are salted
-  across `salt_factor` splits; output is salt-invariant because the
-  kernels are per-row pure functions.
+  across a size-proportional number of splits; output is
+  salt-invariant because the kernels are per-row pure functions.
 - Arrow batch size is capped in session.py so multi-MB html blobs
   bound per-task memory (SURVEY.md §7.3.4).
 """
@@ -43,7 +44,6 @@ from ragflow_spark.kernels.extract import extract_document
 
 DEFAULT_N_SPLITS = 64
 DEFAULT_SALT_FACTOR = 8
-HOT_HOST_FRACTION = 0.05  # host with > 5% of pages is "hot" -> salted
 HOT_HOST_SAMPLE_RATE = 0.01
 # inputs estimated above this take the sampled pre-pass by default: a
 # crawl shard is TBs (sampling is mandatory there); test/golden inputs
@@ -54,12 +54,11 @@ _HOST_RE = r"^[a-z]+://([^/]+)"
 
 
 def resolve_hot_host_sample(
-    pages: DataFrame,
-    sample: float | str | None,
-    auto_threshold_bytes: int = HOT_HOST_AUTO_THRESHOLD_BYTES,
+    pages: DataFrame, sample: float | str | None
 ) -> float | None:
-    """'auto' -> {HOT_HOST_SAMPLE_RATE} when Catalyst's size estimate
-    for the input exceeds `auto_threshold_bytes`, else exact (None).
+    """'auto' -> HOT_HOST_SAMPLE_RATE when Catalyst's size estimate
+    for the input exceeds HOT_HOST_AUTO_THRESHOLD_BYTES, else exact
+    (None).
     The estimate is the optimizer's sizeInBytes statistic — parquet
     footer totals for file scans, propagated through projections — so
     no data is read to make the decision. At crawl scale (TB inputs)
@@ -69,7 +68,7 @@ def resolve_hot_host_sample(
     if sample != "auto":
         return sample  # explicit rate or None (exact)
     est = int(pages._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return HOT_HOST_SAMPLE_RATE if est > auto_threshold_bytes else None
+    return HOT_HOST_SAMPLE_RATE if est > HOT_HOST_AUTO_THRESHOLD_BYTES else None
 
 EXTRACTED_SCHEMA = (
     "url string, warc_ts timestamp, content_type string, "
@@ -86,19 +85,17 @@ def host_of(col):
 
 def compute_hot_hosts(
     pages: DataFrame,
-    fraction: float = HOT_HOST_FRACTION,
-    n_splits: int | None = None,
+    n_splits: int,
     sample: float | str | None = None,
 ) -> dict[str, int]:
     """Cheap pre-pass: per-host salt factors, SIZE-PROPORTIONAL.
 
     Reads only the url column (column pruning keeps the scan tiny even
     when html is TBs). A host whose page share exceeds one split's
-    fair share (1/n_splits, floored at `fraction` when n_splits is
-    None) gets salt factor ceil(share * n_splits) so no single split
-    ends up larger than ~1x the target — this is what keeps stragglers
-    bounded when one host owns 30% of a crawl. Deterministic for a
-    given input (and a given `sample` seed).
+    fair share (1/n_splits) gets salt factor ceil(share * n_splits) so
+    no single split ends up larger than ~1x the target — this is what
+    keeps stragglers bounded when one host owns 30% of a crawl.
+    Deterministic for a given input (and a given `sample` seed).
 
     `sample`: at crawl scale an exact count + full-url groupBy means
     two complete passes over the url column just to find hosts owning
@@ -116,7 +113,7 @@ def compute_hot_hosts(
     total = pages.count()
     if total == 0:
         return {}
-    target = (total / n_splits) if n_splits else (total * fraction)
+    target = total / n_splits
     rows = (
         pages.select(host_of(F.col("url")).alias("host"))
         .groupBy("host")
@@ -134,51 +131,36 @@ def assign_splits(
     pages: DataFrame,
     n_splits: int = DEFAULT_N_SPLITS,
     salt_factor: int = DEFAULT_SALT_FACTOR,
-    hot_hosts: list[str] | dict[str, int] | None = None,
+    hot_hosts: dict[str, int] | None = None,
 ) -> DataFrame:
     """Add `split_id`: a pure function of (url, config).
 
     Base bucketing is by host hash (keeps a host's pages co-located —
-    cache-friendly and politeness-compatible); hosts in `hot_hosts`
-    are salted by a url-hash so a skewed host spreads over several
-    splits (north_rule: "url-hash partitioning with salting for
-    skewed hosts"). `hot_hosts` is either a list (fixed `salt_factor`
-    for each) or a dict host -> per-host factor from
-    `compute_hot_hosts` (size-proportional — a host owning 30% of a
-    10^12-page crawl needs hundreds of salt buckets, not 8).
+    cache-friendly and politeness-compatible); each host in
+    `hot_hosts`, a dict host -> salt factor from `compute_hot_hosts`
+    (size-proportional — a host owning 30% of a 10^12-page crawl
+    needs hundreds of salt buckets, not 8), is salted by a url-hash
+    so a skewed host spreads over that many splits (north_rule:
+    "url-hash partitioning with salting for skewed hosts"). The
+    factors are looked up in one literal map, so the plan stays a
+    projection over the scan: zero-shuffle with or without hot hosts.
+    The map grows with config, not with data: every hot host holds
+    more than total / n_splits rows, so there are fewer than n_splits
+    of them; a lookup costs O(len(hot_hosts)) per row.
+    `salt_factor` is unused; it stays in the signature for callers
+    that still pass it.
     Salting only moves rows between splits; extraction output is
     salt-invariant (tests/test_resume_salt.py)."""
     host = host_of(F.col("url"))
-    base = F.xxhash64(host)
+    keyed = F.xxhash64(host)
     if hot_hosts:
-        if isinstance(hot_hosts, dict):
-            factors = hot_hosts
-        else:
-            factors = {h: salt_factor for h in hot_hosts}
-        factors = {h: max(1, int(f)) for h, f in factors.items()}
-        if len(factors) <= 32:
-            salt_n = F.lit(1)
-            for h, f in sorted(factors.items()):
-                salt_n = F.when(host == h, F.lit(f)).otherwise(salt_n)
-        else:
-            # many hot hosts (huge n_splits): broadcast-join the tiny
-            # host->factor dim instead of a mile-long when-chain
-            spark = pages.sparkSession
-            dim = spark.createDataFrame(
-                sorted(factors.items()), "hh_host string, hh_factor int"
-            )
-            pages = pages.join(
-                F.broadcast(dim), host == F.col("hh_host"), "left"
-            )
-            salt_n = F.coalesce(F.col("hh_factor"), F.lit(1))
-        salt = F.pmod(F.xxhash64(F.col("url")), salt_n)
-        keyed = base + salt
-    else:
-        keyed = base
-    out = pages.withColumn(
+        pairs = [(h, max(1, int(f))) for h, f in sorted(hot_hosts.items())]
+        factors = F.create_map(*(F.lit(x) for pair in pairs for x in pair))
+        salt_n = F.coalesce(factors[host], F.lit(1))
+        keyed = keyed + F.pmod(F.xxhash64(F.col("url")), salt_n)
+    return pages.withColumn(
         "split_id", F.pmod(keyed, F.lit(n_splits)).cast("int")
     )
-    return out.drop("hh_host", "hh_factor")
 
 
 def _extract_batches(budget: int):
@@ -275,31 +257,37 @@ def chunks_of(extracted: DataFrame) -> DataFrame:
 def metrics_for(extracted: DataFrame, run_id: str) -> DataFrame:
     """Per-split lineage rows (SURVEY.md §1.2 metrics schema).
 
-    Declarative aggregation — no second pass over html. failure_codes
-    is a real MAP<INT,BIGINT> (vs the reference's JSON-in-string
-    convention, SURVEY.md §1.2)."""
-    base = extracted.groupBy("split_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
+    Declarative aggregation — no second pass over html, and one scan
+    of the extracted rows: counts per (split_id, parse_code), then per
+    split_id, with failure_codes built from the parse_code != 0 groups
+    (NULL for a split with no failures). failure_codes is a real
+    MAP<INT,BIGINT> (vs the reference's JSON-in-string convention,
+    SURVEY.md §1.2)."""
+    per_code = extracted.groupBy("split_id", "parse_code").agg(
+        F.count(F.lit(1)).alias("n"),
         F.sum((F.col("parse_status") == "ok").cast("long")).alias("n_ok"),
         F.sum((F.col("parse_status") != "ok").cast("long")).alias("n_failed"),
         F.sum("bytes_in").alias("bytes_in"),
         F.sum("extract_ms").alias("wall_ms"),
     )
-    codes = (
-        extracted.filter(F.col("parse_code") != 0)
-        .groupBy("split_id", "parse_code")
-        .count()
-        .groupBy("split_id")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("parse_code"), F.col("count")))
-                )
-            ).alias("failure_codes")
+    codes = F.sort_array(
+        F.collect_list(
+            F.when(F.col("parse_code") != 0, F.struct("parse_code", "n"))
         )
     )
     return (
-        base.join(codes, "split_id", "left")
+        per_code.groupBy("split_id")
+        .agg(
+            # sum() is nullable; n_docs stays a non-null column
+            F.coalesce(F.sum("n"), F.lit(0)).alias("n_docs"),
+            F.sum("n_ok").alias("n_ok"),
+            F.sum("n_failed").alias("n_failed"),
+            F.when(F.size(codes) > 0, F.map_from_entries(codes)).alias(
+                "failure_codes"
+            ),
+            F.sum("bytes_in").alias("bytes_in"),
+            F.sum("wall_ms").alias("wall_ms"),
+        )
         .withColumn("partition_id", F.col("split_id"))
         .withColumn("salt", F.lit(None).cast("int"))
         .withColumn(

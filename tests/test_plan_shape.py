@@ -58,6 +58,37 @@ def test_extraction_is_zero_shuffle(spark, sf_dir):
     assert "Exchange" not in plan, "extraction must not shuffle the html payload"
 
 
+def test_extraction_is_zero_shuffle_with_hot_hosts(spark, sf_dir):
+    """The production configuration: split assignment with the hot-host
+    salt map (every host of this corpus is hot at 64 splits) must
+    still map straight over the scan."""
+    from ragflow_spark.plans.pipeline import (
+        assign_splits,
+        compute_hot_hosts,
+        extract_pages,
+    )
+    from ragflow_spark.sources.pages import synthesize_pages
+
+    pages = synthesize_pages(spark, sf_dir)
+    hot = compute_hot_hosts(pages, n_splits=64)
+    assert 0 < len(hot) < 64
+    ex = extract_pages(assign_splits(pages, 64, 8, hot))
+    assert "Exchange" not in plan_of(ex)
+
+
+def test_metrics_scan_the_extracted_rows_once(spark, tmp_path):
+    from ragflow_spark.plans.pipeline import metrics_for
+
+    path = str(tmp_path / "ex")
+    spark.createDataFrame(
+        [(0, 0, "ok", 1, 1.0), (1, 12, "failed", 2, 1.0)],
+        "split_id int, parse_code int, parse_status string, "
+        "bytes_in bigint, extract_ms double",
+    ).write.parquet(path)
+    plan = plan_of(metrics_for(spark.read.parquet(path), "r"))
+    assert plan.count("FileScan") == 1
+
+
 def test_resume_wave_is_colocated(spark, sf_dir):
     from ragflow_spark.plans.pipeline import assign_splits, extract_pages
     from ragflow_spark.sources.pages import synthesize_pages

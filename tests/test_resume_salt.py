@@ -31,9 +31,7 @@ def test_salt_invariance(spark, pages):
 
     maps = []
     for salt in (2, 8):
-        staged = assign_splits(
-            pages, n_splits=16, salt_factor=salt, hot_hosts=[SKEWED_HOST]
-        )
+        staged = assign_splits(pages, n_splits=16, hot_hosts={SKEWED_HOST: salt})
         maps.append(_text_map(extract_pages(staged)))
     assert maps[0] == maps[1]
 
@@ -44,10 +42,8 @@ def test_salting_spreads_hot_host(spark, pages):
     from ragflow_spark.plans.pipeline import assign_splits, host_of
     from ragflow_spark.sources.pages import SKEWED_HOST
 
-    def n_splits_of_hot(hot_hosts, salt):
-        staged = assign_splits(
-            pages, n_splits=16, salt_factor=salt, hot_hosts=hot_hosts
-        )
+    def n_splits_of_hot(hot_hosts):
+        staged = assign_splits(pages, n_splits=16, hot_hosts=hot_hosts)
         return (
             staged.filter(host_of(F.col("url")) == SKEWED_HOST)
             .select("split_id")
@@ -55,8 +51,33 @@ def test_salting_spreads_hot_host(spark, pages):
             .count()
         )
 
-    assert n_splits_of_hot(None, 8) == 1
-    assert n_splits_of_hot([SKEWED_HOST], 8) > 1
+    assert n_splits_of_hot(None) == 1
+    assert n_splits_of_hot({SKEWED_HOST: 8}) > 1
+
+
+def test_salt_map_matches_when_chain(spark, pages):
+    """The literal host -> factor map must assign every url the split
+    a per-host when-chain gives, at 40 hot hosts (every host in the
+    corpus plus absent ones, each with its own factor)."""
+    from ragflow_spark.plans.pipeline import assign_splits, host_of
+
+    hosts = [
+        r[0] for r in pages.select(host_of(F.col("url"))).distinct().collect()
+    ]
+    hosts += [f"absent{i}.example.org" for i in range(40 - len(hosts))]
+    factors = {h: 2 + i % 7 for i, h in enumerate(sorted(hosts))}
+    assert len(factors) == 40
+
+    host = host_of(F.col("url"))
+    salt_n = F.lit(1)
+    for h, f in sorted(factors.items()):
+        salt_n = F.when(host == h, F.lit(f)).otherwise(salt_n)
+    keyed = F.xxhash64(host) + F.pmod(F.xxhash64(F.col("url")), salt_n)
+    want = pages.select(
+        "url", F.pmod(keyed, F.lit(16)).cast("int").alias("split_id")
+    )
+    got = assign_splits(pages, n_splits=16, hot_hosts=factors)
+    assert dict(got.select("url", "split_id").collect()) == dict(want.collect())
 
 
 def test_kill_resume_byte_identical(spark, pages, tmp_path):
@@ -119,10 +140,11 @@ def test_hot_host_sampling_finds_same_hosts(spark, pages):
     assert sampled == compute_hot_hosts(pages, n_splits=16, sample=0.5)
 
 
-def test_hot_host_auto_sample_resolution(spark, pages):
+def test_hot_host_auto_sample_resolution(spark, pages, monkeypatch):
     """'auto' must take the sampled path when the optimizer's input
     size estimate exceeds the threshold and the exact path below it
     (crawl inputs sample by default; test inputs stay exact)."""
+    from ragflow_spark.plans import pipeline
     from ragflow_spark.plans.pipeline import (
         HOT_HOST_SAMPLE_RATE,
         resolve_hot_host_sample,
@@ -131,10 +153,8 @@ def test_hot_host_auto_sample_resolution(spark, pages):
     # tiny input, default (1 GiB) threshold -> exact
     assert resolve_hot_host_sample(pages, "auto") is None
     # same input with a toy threshold models a crawl-sized estimate
-    assert (
-        resolve_hot_host_sample(pages, "auto", auto_threshold_bytes=10)
-        == HOT_HOST_SAMPLE_RATE
-    )
+    monkeypatch.setattr(pipeline, "HOT_HOST_AUTO_THRESHOLD_BYTES", 10)
+    assert resolve_hot_host_sample(pages, "auto") == HOT_HOST_SAMPLE_RATE
     # explicit values pass through untouched
     assert resolve_hot_host_sample(pages, None) is None
     assert resolve_hot_host_sample(pages, 0.25) == 0.25
@@ -274,6 +294,66 @@ def test_snapshot_stale_writer_never_overwrites(tmp_path, monkeypatch):
         "snap-000001.json",
         "snap-000002.json",
     ]
+
+
+def test_snapshots_absent_vs_unlistable(tmp_path):
+    """A missing snapshots dir means no snapshots; a snapshots path
+    that cannot be listed must raise, or resume would re-reconcile
+    every finished split."""
+    from ragflow_spark.plans.checkpoint import snapshots
+
+    assert snapshots(str(tmp_path / "missing")) == []
+    out = tmp_path / "blocked"
+    out.mkdir()
+    (out / "snapshots").write_text("not a directory")
+    with pytest.raises(NotADirectoryError):
+        snapshots(str(out))
+
+
+def test_metrics_rows_exact(spark):
+    """The manifest's per-split counts, bytes and failure taxonomy, on
+    hand-built extracted rows: failure_codes counts each nonzero
+    parse_code and is NULL for a split with no failures."""
+    from ragflow_spark.plans.pipeline import metrics_for
+
+    rows = [
+        (0, 0, "ok", 10, 1.0),
+        (0, 0, "ok", 20, 1.0),
+        (0, 12, "failed", 30, 1.0),
+        (0, 12, "failed", 40, 1.0),
+        (0, 99, "failed", 50, 1.0),
+        (1, 0, "ok", 7, 1.0),
+        (1, 0, "ok", 8, 1.0),
+    ]
+    extracted = spark.createDataFrame(
+        rows,
+        "split_id int, parse_code int, parse_status string, "
+        "bytes_in bigint, extract_ms double",
+    )
+    m = metrics_for(extracted, "r")
+    assert m.schema.simpleString() == (
+        "struct<split_id:int,partition_id:int,salt:int,input_split:string,"
+        "n_docs:bigint,n_ok:bigint,n_failed:bigint,"
+        "failure_codes:map<int,bigint>,bytes_in:bigint,wall_ms:double,"
+        "run_id:string,completed_at:timestamp>"
+    )
+    assert not m.schema["n_docs"].nullable
+    got = {
+        r["split_id"]: r.asDict()
+        for r in m.drop("completed_at").collect()
+    }
+    assert got == {
+        0: dict(
+            split_id=0, partition_id=0, salt=None, input_split="split-0",
+            n_docs=5, n_ok=2, n_failed=3, failure_codes={12: 2, 99: 1},
+            bytes_in=150, wall_ms=5.0, run_id="r",
+        ),
+        1: dict(
+            split_id=1, partition_id=1, salt=None, input_split="split-1",
+            n_docs=2, n_ok=2, n_failed=0, failure_codes=None,
+            bytes_in=15, wall_ms=2.0, run_id="r",
+        ),
+    }
 
 
 def test_completed_splits_absent_vs_unreadable(spark, tmp_path):
