@@ -26,9 +26,12 @@ Common Crawl layout); `--input jsonl:<glob>` reads JSONL page dumps
 path with the (url, warc_ts, html, text, lang) schema.
 
 Sizing guidance for 10^12 docs (SURVEY.md §4.2): n_splits >= 16x total
-executor cores so AQE and the resume grain both have headroom; wave
-size = one cluster-full of tasks. Hot hosts need no sizing: each gets
-a salt factor proportional to its page share (compute_hot_hosts).
+executor cores so AQE and the resume grain both have headroom.
+Extraction runs in the input scan's own tasks, so its parallelism is
+the scan's task count; wave size only sets the commit grain (how much
+a killed run redoes, and one snapshot per wave). Hot hosts need no
+sizing: each gets a salt factor proportional to its page share
+(compute_hot_hosts).
 """
 
 from __future__ import annotations

@@ -47,7 +47,10 @@ class ExtractResult:
 def extract_document(
     payload: bytes | None, budget: int = DEFAULT_TOKEN_BUDGET
 ) -> ExtractResult:
-    """Total function: any byte string (or None) -> ExtractResult."""
+    """Total function: any byte string (or None) -> ExtractResult.
+    A CODE_INTERNAL row keeps the sniffed kind ('html' if sniffing
+    itself raised)."""
+    kind = "html"
     try:
         kind = sniff_payload(payload)
         if kind == "empty":
@@ -72,4 +75,4 @@ def extract_document(
             res.chunk_tokens.append(n)
         return res
     except Exception:
-        return ExtractResult("html", "", "failed", CODE_INTERNAL, 0)
+        return ExtractResult(kind, "", "failed", CODE_INTERNAL, 0)

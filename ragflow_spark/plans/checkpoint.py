@@ -2,13 +2,13 @@
 
 Semantics (SURVEY.md §4.3, north_rule "resumable from checkpoint"):
 a split is complete iff (a) its extracted output committed and (b) its
-metrics row exists. Work proceeds in *waves* of splits; each wave is
-one Spark job that appends ``extracted/`` parquet partitioned by
-split_id and then appends the wave's metrics rows. A killed run
-re-parses at most one wave (wave_size=1 -> at most one split,
-BASELINE.md resume-overhead target); on a real cluster wave_size is
-sized to a full cluster of tasks and the two appends become a single
-Iceberg transaction.
+metrics row exists, or a committed snapshot covers it (a split with no
+pages has neither). Work proceeds in *waves* of splits; each wave is
+two SQL executions: one overwrites its split directories of
+``extracted/``, one re-reads just those to append its metrics rows. A
+killed run re-parses at most one wave (wave_size=1 -> at most one
+split, BASELINE.md resume-overhead target); on a real cluster the two
+appends become a single Iceberg transaction.
 
 Resume = anti-join of splits against the manifest — plain DataFrame
 code, no custom source. The reference's analog is whole-state JSON
@@ -150,6 +150,13 @@ def completed_splits(spark: SparkSession, out_dir: str) -> set[int]:
     }
 
 
+def wave_frame(staged: DataFrame, wave: list[int], budget: int) -> DataFrame:
+    """A wave's rows: extracted in the scan's tasks, then one task per split."""
+    return extract_pages(
+        staged.filter(F.col("split_id").isin(wave)), budget=budget
+    ).repartition(len(wave), "split_id")
+
+
 def run_resumable(
     spark: SparkSession,
     pages: DataFrame,
@@ -193,24 +200,24 @@ def run_resumable(
         record_snapshot(
             out_dir, run_id, -1, orphaned, note="metrics-snapshot reconcile"
         )
-    todo = sorted(set(range(n_splits)) - done)
+    # a snapshot lands only after its wave's write and metrics append:
+    # its splits are done, pageless ones (no metrics row) included
+    todo = sorted(set(range(n_splits)) - done - snap_covered)
     ex_path = os.path.join(out_dir, "extracted")
     m_path = os.path.join(out_dir, "metrics")
     waves = [todo[i : i + wave_size] for i in range(0, len(todo), wave_size)]
     for w, wave in enumerate(waves):
-        subset = staged.filter(F.col("split_id").isin(wave))
-        extracted = extract_pages(subset, budget=budget, n_partitions=len(wave))
         # idempotent per-split overwrite: re-running a half-written
         # wave replaces exactly its split directories
-        (
-            extracted.write.mode("overwrite")
-            .partitionBy("split_id")
-            .parquet(ex_path)
-        )
-        done_extracted = spark.read.parquet(ex_path).filter(
-            F.col("split_id").isin(wave)
-        )
-        metrics_for(done_extracted, run_id).write.mode("append").parquet(m_path)
+        wave_frame(staged, wave, budget).write.mode("overwrite").partitionBy(
+            "split_id"
+        ).parquet(ex_path)
+        # this wave's directories only; a split with no pages has none
+        dirs = (os.path.join(ex_path, f"split_id={s}") for s in wave)
+        written = [d for d in dirs if os.path.isdir(d)]
+        if written:
+            wave_rows = spark.read.option("basePath", ex_path).parquet(*written)
+            metrics_for(wave_rows, run_id).write.mode("append").parquet(m_path)
         record_snapshot(out_dir, run_id, w, wave)
         if fail_after_waves is not None and w + 1 >= fail_after_waves:
             raise RuntimeError(f"injected failure after wave {w}")

@@ -4,14 +4,14 @@ One Spark DataFrame program (SURVEY.md §7.0 spine):
 
     pages
       |> assign_splits        url-host hash bucketing, salted hot hosts
-      |> repartition(split)   resume waves only: co-locate each split in
-                              one task (a plain run maps over the scan)
       |> mapInPandas(extract) vectorized Arrow batches over the pure
                               kernels (one DOM parse per page; chunker
                               composed in the same pass — SURVEY.md
                               §4.2). Errors become coded rows, never
                               task failures (reference error-as-row
                               convention, agent/component/baidu.py:70-71).
+      |> repartition(split)   resume waves only, on the extracted rows:
+                              one writer task per split (checkpoint.py)
       |> metrics_for          per-split lineage/metrics rows (the
                               checkpoint manifest, SURVEY.md §4.3)
 
@@ -218,24 +218,16 @@ def _extract_batches(budget: int):
 def extract_pages(
     pages_with_splits: DataFrame,
     budget: int = DEFAULT_TOKEN_BUDGET,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """pages (with split_id) -> extracted rows with nested chunks.
 
-    ZERO-SHUFFLE by default: extraction maps directly over the scan
-    partitions — shuffling the html payload (the 100 TB column) just
-    to co-locate splits costs ~25% wall at high parallelism and buys
-    nothing, because (a) partitionBy('split_id') writes correctly from
-    any task layout and (b) the metrics groupBy shuffles only the
-    small extracted rows. Pass `n_partitions` to force a repartition
-    on split_id — used by the resume path to compact a filtered wave
-    (a small subset) into one task per split."""
-    df = pages_with_splits
-    if n_partitions:
-        df = df.repartition(n_partitions, "split_id")
-    return df.select("url", "warc_ts", "html", "split_id").mapInPandas(
-        _extract_batches(budget), schema=EXTRACTED_SCHEMA
-    )
+    ZERO-SHUFFLE: maps straight over the scan partitions, so the UDF
+    runs in the scan's balanced tasks and the html payload (the 100 TB
+    column) never shuffles. Callers that need one task per split
+    (resume waves) repartition the extracted rows."""
+    return pages_with_splits.select(
+        "url", "warc_ts", "html", "split_id"
+    ).mapInPandas(_extract_batches(budget), schema=EXTRACTED_SCHEMA)
 
 
 def chunks_of(extracted: DataFrame) -> DataFrame:

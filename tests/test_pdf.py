@@ -55,6 +55,26 @@ def test_p05_encrypted():
     assert code == CODE_PDF_ENCRYPTED and sections == []
 
 
+def test_internal_error_keeps_sniffed_kind(monkeypatch):
+    """The catch-all's coded row keeps the kind sniffing gave: a PDF
+    whose parser raises is ('pdf', 'failed', CODE_INTERNAL); a payload
+    whose sniffing raises falls back to 'html'."""
+    from ragflow_spark.kernels import extract
+    from ragflow_spark.kernels.sniff import CODE_INTERNAL
+
+    def boom(_payload):
+        raise ValueError("parser bug")
+
+    monkeypatch.setattr(extract, "pdf_extract", boom)
+    r = extract.extract_document(single_column_pdf(["some text"]))
+    assert (r.content_type, r.parse_status, r.parse_code) == (
+        "pdf", "failed", CODE_INTERNAL
+    )
+    monkeypatch.setattr(extract, "sniff_payload", boom)
+    r = extract.extract_document(b"<html>")
+    assert (r.content_type, r.parse_code) == ("html", CODE_INTERNAL)
+
+
 def test_uncompressed_stream():
     pdf = make_pdf([[(72.0, 700.0, "hello world")]], compress=False)
     sections, code = pdf_extract(pdf)

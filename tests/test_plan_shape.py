@@ -89,13 +89,26 @@ def test_metrics_scan_the_extracted_rows_once(spark, tmp_path):
     assert plan.count("FileScan") == 1
 
 
-def test_resume_wave_is_colocated(spark, sf_dir):
-    from ragflow_spark.plans.pipeline import assign_splits, extract_pages
+def test_resume_wave_shuffles_only_extracted_rows(spark, sf_dir):
+    """A resume wave extracts in the scan's own tasks: its one
+    Exchange, hashpartitioning(split_id, len(wave)), sits above every
+    MapInPandas, so the html payload never shuffles and each split is
+    still written from one task."""
+    import re
+
+    from ragflow_spark.plans.checkpoint import wave_frame
+    from ragflow_spark.plans.pipeline import assign_splits
     from ragflow_spark.sources.pages import synthesize_pages
 
     pages = synthesize_pages(spark, sf_dir)
-    ex = extract_pages(assign_splits(pages, 16, 8, None), n_partitions=4)
-    assert "Exchange hashpartitioning(split_id" in plan_of(ex)
+    wave = wave_frame(assign_splits(pages, 16), [1, 4, 9, 12], 256)
+    lines = plan_of(wave).splitlines()
+    exchanges = [i for i, line in enumerate(lines) if "Exchange" in line]
+    assert len(exchanges) == 1
+    shuffle = lines[exchanges[0]]
+    assert re.search(r"Exchange hashpartitioning\(split_id#\d+, 4\)", shuffle)
+    udfs = [i for i, line in enumerate(lines) if "MapInPandas" in line]
+    assert udfs and exchanges[0] < min(udfs)
 
 
 def test_dim_joins_are_broadcast(spark, sf_dir, ops):

@@ -124,6 +124,65 @@ def test_kill_resume_byte_identical(spark, pages, tmp_path):
     assert m_r.groupBy("split_id").count().filter("count > 1").count() == 0
 
 
+@pytest.fixture(scope="module")
+def sparse_run(spark, pages, tmp_path_factory):
+    """13 pages over 32 splits in 4-split waves: most splits hold no
+    page, some waves mix empty and written splits, and some waves
+    are wholly empty. Returns (pages, out_dir, written split ids)."""
+    import os
+
+    from ragflow_spark.plans.checkpoint import run_resumable
+
+    urls = sorted(r["url"] for r in pages.select("url").collect())[::40][:13]
+    few = pages.filter(F.col("url").isin(urls))
+    out = str(tmp_path_factory.mktemp("sparse") / "out")
+    run_resumable(spark, few, out, run_id="a", n_splits=32, wave_size=4)
+    written = {
+        int(n.split("=")[1])
+        for n in os.listdir(os.path.join(out, "extracted"))
+        if n.startswith("split_id=")
+    }
+    return few, out, written
+
+
+def test_metrics_rows_across_waves(spark, sparse_run):
+    """One metrics row per written split, with n_docs equal to that
+    split's extracted rows; no row for an empty split, even in a wave
+    that wrote nothing; the n_docs sum is the page count."""
+    from ragflow_spark.plans.checkpoint import read_outputs, snapshots
+
+    few, out, written = sparse_run
+    waves = [set(s["splits"]) for s in snapshots(out)]
+    assert set().union(*waves) == set(range(32))
+    assert any(w - written and w & written for w in waves)
+    assert any(not w & written for w in waves)
+
+    ex, m = read_outputs(spark, out)
+    per_split = dict(ex.groupBy("split_id").count().collect())
+    assert set(per_split) == written
+    rows = m.select("split_id", "n_docs").collect()
+    assert len(rows) == len(written)
+    assert dict(rows) == per_split
+    assert sum(r["n_docs"] for r in rows) == few.count()
+
+
+def test_rerun_with_empty_splits_adds_nothing(spark, sparse_run):
+    """A split with no pages has no metrics row, but the snapshot of
+    its wave marks it done: rerunning a finished out_dir must redo no
+    split, so it adds no snapshot and no metrics file."""
+    import os
+
+    from ragflow_spark.plans.checkpoint import run_resumable, snapshots
+
+    few, out, written = sparse_run
+    assert written < set(range(32))
+    mpath = os.path.join(out, "metrics")
+    snaps, parts = snapshots(out), sorted(os.listdir(mpath))
+    run_resumable(spark, few, out, run_id="b", n_splits=32, wave_size=4)
+    assert snapshots(out) == snaps
+    assert sorted(os.listdir(mpath)) == parts
+
+
 def test_hot_host_sampling_finds_same_hosts(spark, pages):
     """The seeded-sample pre-pass must find the same hot-host SET as
     the exact two-pass mode (the skewed host owns ~30% of pages, far
